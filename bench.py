@@ -4,7 +4,8 @@ Prints ONE JSON line:
 
     {"metric": "...", "value": <sec>, "unit": "sec",
      "queries": {name: sec, ...}, "sf": <sf>,
-     "replay": {"events": N, "peak_cores": 32,
+     "host_cpus": <os.cpu_count()>,
+     "replay": {"events": N, "peak_cores": <SPARK_GRAFT_CPUS or host_cpus>,
                 "peak": {"wall_sec": ..., "events_per_sec": ...},
                 "n_cores": 1,
                 "low":  {"wall_sec": ..., "events_per_sec": ...},
@@ -17,10 +18,12 @@ the same materialized change-log parquet at two parallelism levels
 default N=1, see BENCH.md for the full 1/2/4/8/16/32 matrix and why high
 core counts are noise-dominated on this shared host);
 ``scaling_efficiency`` = (throughput_4N / throughput_N) / 4, target ≥ 0.8.
-A peak-parallelism run (local[32]) is also reported for absolute throughput.
+A peak-parallelism run (local[host cpus]) is also reported for absolute
+throughput.
 
 Env knobs: SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1),
-SPARK_GRAFT_CPUS (query-run parallelism, default 32),
+SPARK_GRAFT_CPUS (query-run and peak-leg parallelism, default
+os.cpu_count()),
 SPARK_GRAFT_BENCH_EVENTS (replay size, default 10_000_000 — matches the
 N_EVENTS default below; don't shrink it, efficiency dilutes at 2M),
 SPARK_GRAFT_BENCH_SKIP_SCALING=1 (skip the second replay run).
@@ -270,7 +273,9 @@ def main() -> None:
     attempts = int(os.environ.get("SPARK_GRAFT_BENCH_ATTEMPTS", "2"))
     low = int(os.environ.get("SPARK_GRAFT_BENCH_CORES_LOW", "1"))
     high = 4 * low  # the north rule's N vs 4N pair
-    peak = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    # one task slot per host CPU: a fixed local[32] oversubscribes small hosts
+    host_cpus = os.cpu_count() or 1
+    peak = int(os.environ.get("SPARK_GRAFT_CPUS", str(host_cpus)))
     # best-of-N for the peak too: a single attempt can read 30% under
     # capability on this ±50%-noise host (memory/sandbox-perf-traps);
     # the peak leg carries the live health/metrics scraper so the headline
@@ -297,6 +302,7 @@ def main() -> None:
             "unit": "sec",
             "queries": qtimes,
             "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+            "host_cpus": host_cpus,
             "replay": result,
         }
     )

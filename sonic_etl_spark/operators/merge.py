@@ -129,36 +129,18 @@ def reduce_batch(
     )
 
 
-def assert_no_decode_errors(typed: DataFrame) -> int:
-    """Fail-the-batch semantics (transformation/err.rs:1-31): any row with a
-    decode error aborts the batch (which is then retried upstream), instead of
-    silently dropping rows. Returns the clean row count.
-
-    NOTE: this is a standalone action — it evaluates the decode a second
-    time. The replay hot path uses :func:`observe_decode_errors` instead,
-    which rides the merge write job for free."""
-    agg = typed.agg(
-        F.count(F.lit(1)).alias("n"),
-        F.count("decode_error").alias("bad"),
-        F.first("decode_error", ignorenulls=True).alias("example"),
-    ).first()
-    if agg["bad"]:
-        raise ValueError(
-            f"decode failed for {agg['bad']}/{agg['n']} rows in batch; "
-            f"first error: {agg['example']}"
-        )
-    return agg["n"]
-
-
 def observe_decode_errors(typed: DataFrame):
     """Attach a zero-cost decode-error observation to the batch.
 
-    Returns (typed', check) where ``check()`` raises the same fail-the-batch
-    ValueError as :func:`assert_no_decode_errors` — but the metrics are
-    collected DURING whatever action consumes ``typed'`` (the merge's file
-    write), not by an extra pass. Call ``check()`` after the write and
-    before the snapshot commit: on failure the written files stay orphaned
-    and the table state is untouched (same crash-safety as any abort).
+    Fail-the-batch semantics (transformation/err.rs:1-31): any row with a
+    decode error aborts the batch (which is then retried upstream) instead
+    of silently dropping rows. Returns (typed', check) where ``check()``
+    raises ValueError on a decode error and otherwise returns the row
+    count — the metrics are collected DURING whatever action consumes
+    ``typed'`` (the merge's file write), not by an extra pass. Call
+    ``check()`` after the write and before the snapshot commit: on failure
+    the written files stay orphaned and the table state is untouched (same
+    crash-safety as any abort).
     """
     from pyspark.sql import Observation
 

@@ -12,10 +12,13 @@ snapshot pointer flip, so every (partition, offset-range) manifest entry is
 either applied to ALL tables or NONE — cross-table atomicity by
 construction, no reconciliation DAG needed.
 
-Layout mirrors :class:`~sonic_etl_spark.sources.table.TransactionalParquetTable`
-(same merge-on-read buckets, field-id schemas, idempotent manifest guard);
-the snapshot json simply carries a ``tables`` map instead of one table's
-metadata, and data files live under ``data/snap-N/<table>/_pb=K``.
+The set is the second facade over the one storage core in
+:mod:`~sonic_etl_spark.sources.table`: the same snapshot log, merge-on-read
+buckets, field-id schemas and idempotent manifest guard as
+:class:`~sonic_etl_spark.sources.table.TransactionalParquetTable`, and the
+same per-table transitions. Its snapshot json carries a ``tables`` map of
+table dicts instead of one table's metadata, and data files live under
+``data/snap-N/<table>/_pb=K``.
 
 At 100 TB: each entry of ``tables`` becomes its own Iceberg table and the
 shared snapshot becomes a multi-table transaction (Iceberg REST catalog
@@ -25,24 +28,16 @@ project N ways, one atomic commit — is unchanged.
 
 from __future__ import annotations
 
-import json
-import os
-import time
-import uuid
 from dataclasses import dataclass, field
 
-from pyspark.sql import DataFrame, SparkSession
-
-import pyspark.sql.functions as F
+from pyspark.sql import DataFrame
 
 from sonic_etl_spark.sources.table import (
-    DATA_DIR,
-    LATEST,
-    SNAP_DIR,
-    CommitConflict,
-    _expire_snapshots_impl,
-    _lww_reduce,
-    read_buckets_projected,
+    SnapshotLog,
+    _changes,
+    _lookup,
+    _new_table,
+    _state,
 )
 
 
@@ -62,159 +57,56 @@ class TableSpec:
     stats_cols: list[str] = field(default_factory=list)
 
 
-class TransactionalTableSet:
-    """N merge-on-read tables sharing one snapshot log + manifest set."""
+class TransactionalTableSet(SnapshotLog):
+    """N merge-on-read tables sharing one snapshot log + manifest set.
 
-    def __init__(self, spark: SparkSession, path: str, n_buckets: int = 32):
-        self.spark = spark
-        self.path = path
-        self.n_buckets = n_buckets
-        os.makedirs(os.path.join(path, SNAP_DIR), exist_ok=True)
-        os.makedirs(os.path.join(path, DATA_DIR), exist_ok=True)
+    Every write — merge_all, compact, rebucket, evolve, rollback — is ONE
+    pointer flip of the shared log, so all tables move together.
+    """
 
-    # ------------------------------------------------------------- snapshots
-    def _latest_path(self) -> str:
-        return os.path.join(self.path, LATEST)
+    # own class attributes, so per-class wrappers of the maintenance calls
+    # (tracers patch ``cls.__dict__``) see them
+    compact = SnapshotLog.compact
+    expire_snapshots = SnapshotLog.expire_snapshots
 
-    def latest(self) -> dict | None:
-        p = self._latest_path()
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            sid = json.load(f)["snapshot_id"]
-        with open(os.path.join(self.path, SNAP_DIR, f"snap-{sid}.json")) as f:
-            return json.load(f)
+    # ------------------------------------------------------------------ layout
+    def _tables(self, snap: dict) -> dict[str, dict]:
+        return snap["tables"]
 
-    def snapshot(self, snapshot_id: int) -> dict:
-        with open(
-            os.path.join(self.path, SNAP_DIR, f"snap-{snapshot_id}.json")
-        ) as f:
-            return json.load(f)
+    def _layout(self, tables: dict[str, dict], n_buckets: int) -> dict:
+        return {"n_buckets": n_buckets, "tables": tables}
 
-    def history(self) -> list[dict]:
-        """Retained snapshots, oldest first; stops at the expiry horizon."""
-        out = []
-        snap = self.latest()
-        while snap is not None:
-            out.append(snap)
-            pid = snap.get("parent_id")
-            try:
-                snap = self.snapshot(pid) if pid is not None else None
-            except FileNotFoundError:
-                snap = None
-        return list(reversed(out))
+    def _batch_metrics(self, metrics: dict, written: dict[str, int], elapsed: float) -> dict:
+        return {**metrics, "buckets_written": written, "apply_sec": round(elapsed, 3)}
 
-    def expire_snapshots(
-        self, keep_last: int = 1, min_age_sec: float = 0.0
-    ) -> dict:
-        """Retention maintenance for the whole set — one call covers every
-        table because they share the snapshot log (see
-        TransactionalParquetTable.expire_snapshots for the contract)."""
+    def _table(self, name: str, snap: dict | None = None) -> dict:
+        snap = snap or self.latest()
+        if snap is None or name not in snap["tables"]:
+            raise FileNotFoundError(f"table {name} not in set {self.path}")
+        return snap["tables"][name]
 
-        def roots_of(snap):
-            for tbl in snap["tables"].values():
-                for ent in tbl["buckets"].values():
-                    for f in ent["files"]:
-                        # "data/snap-N/<table>/_pb=B" -> "snap-N"
-                        yield f["path"].split(os.sep)[1]
-
-        return _expire_snapshots_impl(
-            self.path, self.history(), roots_of, keep_last, min_age_sec
+    # ------------------------------------------------------------------ create
+    def create(self, tables: dict[str, TableSpec]) -> dict:
+        return self.latest() or self._commit(
+            None,
+            {
+                name: _new_table(spec.fields, spec.key_cols, spec.order_cols,
+                                 spec.stats_cols, spec.bucket_cols or spec.key_cols)
+                for name, spec in tables.items()
+            },
+            {}, manifests=[], n_buckets=self.n_buckets,
         )
 
-    def _commit_snapshot(self, snap: dict, expected_parent: int | None) -> None:
-        cur = self.latest()
-        cur_id = cur["snapshot_id"] if cur else None
-        if cur_id != expected_parent:
-            raise CommitConflict(f"expected parent {expected_parent}, found {cur_id}")
-        sp = os.path.join(self.path, SNAP_DIR, f"snap-{snap['snapshot_id']}.json")
-        with open(sp, "w") as f:
-            json.dump(snap, f)
-        tmp = self._latest_path() + f".tmp-{uuid.uuid4().hex}"
-        with open(tmp, "w") as f:
-            json.dump({"snapshot_id": snap["snapshot_id"]}, f)
-            f.flush()
-            os.fsync(f.fileno())
-        os.rename(tmp, self._latest_path())  # atomic on POSIX
-
-    # ---------------------------------------------------------------- create
-    def create(self, tables: dict[str, TableSpec]) -> dict:
-        if self.latest() is not None:
-            return self.latest()
-        from sonic_etl_spark.sources.table import validate_stats_cols
-
-        tbls = {}
-        for name, spec in tables.items():
-            validate_stats_cols(spec.fields, spec.stats_cols)
-            tbls[name] = {
-                "schemas": [
-                    {
-                        "schema_id": 0,
-                        "fields": [
-                            {"id": i, "name": n, "type": t}
-                            for i, (n, t) in enumerate(spec.fields)
-                        ],
-                    }
-                ],
-                "current_schema_id": 0,
-                "key_cols": spec.key_cols,
-                "order_cols": spec.order_cols,
-                "bucket_cols": spec.bucket_cols or spec.key_cols,
-                "stats_cols": spec.stats_cols,
-                "buckets": {},
-            }
-        snap = {
-            "snapshot_id": 1,
-            "parent_id": None,
-            "n_buckets": self.n_buckets,
-            "tables": tbls,
-            "manifests": [],
-            "metrics": {},
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=None)
-        return snap
-
-    # ------------------------------------------------------------- manifests
-    def committed_ranges(self) -> set[tuple[int, int, int]]:
-        """Offset-range entries only (the planner's resumption input).
-        Non-range idempotency entries (e.g. ("retry", tag) from
-        streaming.fanout.retry_quarantine) live in the same manifest set but
-        are filtered here — the planner unpacks (pid, start, end) triples."""
-        snap = self.latest()
-        if snap is None:
-            return set()
-        return {tuple(m) for m in snap["manifests"] if len(m) == 3}
-
-    def committed_marks(self) -> set[tuple]:
-        """Non-range idempotency entries (len != 3), e.g. retry tags."""
-        snap = self.latest()
-        if snap is None:
-            return set()
-        return {tuple(m) for m in snap["manifests"] if len(m) != 3}
-
-    # ----------------------------------------------------------------- reads
-    def table_names(self) -> list[str]:
-        snap = self.latest()
-        return sorted(snap["tables"]) if snap else []
-
+    # ------------------------------------------------------------------- reads
     def read(
         self,
         name: str,
         include_tombstones: bool = False,
         snap: dict | None = None,
     ) -> DataFrame:
-        snap = snap or self.latest()
-        if snap is None or name not in snap["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        tbl = snap["tables"][name]
-        df = read_buckets_projected(
-            self.spark, self.path, tbl, list(tbl["buckets"].keys())
-        )
-        df = _lww_reduce(df, tbl["key_cols"], tbl["order_cols"])
-        if not include_tombstones and "op" in df.columns:
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
+        tbl = self._table(name, snap)
+        return _state(self.spark, self.path, tbl, list(tbl["buckets"]),
+                      include_tombstones=include_tombstones)
 
     def read_asof(self, ts: float, name: str) -> DataFrame:
         """Timestamp time travel for one table of the set: the state under
@@ -222,42 +114,7 @@ class TransactionalTableSet:
         SHARED log, so a multi-table consumer reading several names at the
         same ts gets a CONSISTENT cross-table cut — the point of the
         single-pointer design). Raises beyond the retention horizon."""
-        eligible = [
-            s for s in self.history() if s.get("committed_at", 0.0) <= ts
-        ]
-        if not eligible:
-            raise FileNotFoundError(
-                f"no retained snapshot at or before ts={ts}"
-            )
-        return self.read(name, snap=eligible[-1])
-
-    def rollback(self, snapshot_id: int) -> dict:
-        """Restore the WHOLE set to a historical snapshot's state in one
-        commit (Iceberg rollback semantics, cross-table-atomic here: every
-        table's files and the shared manifest set revert together, so a
-        fan-out replay resumes from the restored frontier and re-applies
-        the undone batches to ALL tables under the same manifests)."""
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} does not exist")
-        if snapshot_id == parent["snapshot_id"]:
-            return {"status": "noop", "snapshot_id": snapshot_id}
-        target = self.snapshot(snapshot_id)  # FileNotFoundError if expired
-        snap = {
-            "snapshot_id": parent["snapshot_id"] + 1,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": target["n_buckets"],
-            "tables": target["tables"],
-            "manifests": target["manifests"],
-            "metrics": {"rollback": {"restored_snapshot_id": snapshot_id}},
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "rolled_back",
-            "snapshot_id": snap["snapshot_id"],
-            "restored_snapshot_id": snapshot_id,
-        }
+        return self.read(name, snap=self._asof(ts))
 
     def lookup(self, name: str, **key) -> DataFrame:
         """Point read of one table in the set — the serving path: hash the
@@ -265,37 +122,9 @@ class TransactionalTableSet:
         that bucket's files, filter to the full key, LWW-resolve,
         tombstone-filter. Requires the key to include every bucket column
         (bucket pruning is impossible otherwise — use read().where)."""
-        snap = self.latest()
-        if snap is None or name not in snap["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        tbl = snap["tables"][name]
-        kc = tbl["key_cols"]
-        if sorted(key) != sorted(kc):
-            raise KeyError(f"lookup needs exactly the key columns {kc}")
-        bcols = tbl["bucket_cols"]
-        missing = [c for c in bcols if c not in key]
-        if missing:
-            raise KeyError(f"key lacks bucket columns {missing}")
-        cur = next(
-            s for s in tbl["schemas"]
-            if s["schema_id"] == tbl["current_schema_id"]
-        )
-        types = {f["name"]: f["type"] for f in cur["fields"]}
-        ddl = ", ".join(f"`{c}` {types[c]}" for c in bcols)
-        one = self.spark.createDataFrame([tuple(key[c] for c in bcols)], ddl)
-        bucket = one.select(
-            F.pmod(
-                F.xxhash64(*[F.col(c) for c in bcols]),
-                F.lit(snap["n_buckets"]),
-            ).cast("int").alias("b")
-        ).first()["b"]
-        df = read_buckets_projected(self.spark, self.path, tbl, [str(bucket)])
-        for c in kc:
-            df = df.where(F.col(c) == key[c])
-        df = _lww_reduce(df, kc, tbl["order_cols"])
-        if "op" in df.columns:
-            df = df.filter(~F.col("op").eqNullSafe("delete"))
-        return df
+        snap = self._snap()
+        tbl = self._table(name, snap)
+        return _lookup(self.spark, self.path, tbl, self._n_buckets(snap), key)
 
     def read_changes(
         self,
@@ -311,133 +140,14 @@ class TransactionalTableSet:
         ``where_between`` prunes new files by zone-map stats when the spec
         declared ``stats_cols``). A fan-out consumer tails e.g.
         ``file_versions`` this way without rereading the table."""
-        to_snap = (
-            self.latest()
-            if to_snapshot_id is None
-            else self.snapshot(to_snapshot_id)
+        to_tbl = self._table(name, self._snap(to_snapshot_id))
+        from_tbl = (
+            None if from_snapshot_id is None
+            else self._table(name, self.snapshot(from_snapshot_id))
         )
-        if to_snap is None or name not in to_snap["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        to_tbl = to_snap["tables"][name]
+        return _changes(self.spark, self.path, from_tbl, to_tbl, reduced, where_between)
 
-        def fset(tbl):
-            return {
-                f["path"]
-                for ent in tbl["buckets"].values()
-                for f in ent["files"]
-            }
-
-        from_files: set[str] = set()
-        if from_snapshot_id is not None:
-            from_files = fset(self.snapshot(from_snapshot_id)["tables"][name])
-        rewritten = from_files - fset(to_tbl)
-        if rewritten:
-            raise ValueError(
-                f"incremental read of {name!r} crosses a compaction/expiry "
-                f"boundary ({len(rewritten)} base files rewritten); re-sync "
-                "with a full read()"
-            )
-        fid = None
-        if where_between is not None:
-            col, lo, hi = where_between
-            cur = next(
-                s for s in to_tbl["schemas"]
-                if s["schema_id"] == to_tbl["current_schema_id"]
-            )
-            hit = [f for f in cur["fields"] if f["name"] == col]
-            if not hit:
-                raise KeyError(f"where_between: no column {col!r} in {name}")
-            fid = str(hit[0]["id"])
-
-        def _overlaps(fent: dict) -> bool:
-            if fid is None:
-                return True
-            st = fent.get("stats", {}).get(fid)
-            if st is None or st[0] is None or st[1] is None:
-                return True  # no stats: conservatively keep
-            return st[1] >= lo and st[0] <= hi
-
-        new_buckets = {}
-        for b, ent in to_tbl["buckets"].items():
-            nf = [
-                f for f in ent["files"]
-                if f["path"] not in from_files and _overlaps(f)
-            ]
-            if nf:
-                new_buckets[b] = {"files": nf}
-        tbl = {**to_tbl, "buckets": new_buckets}
-        df = read_buckets_projected(
-            self.spark, self.path, tbl, list(new_buckets)
-        )
-        if where_between is not None:
-            df = df.where(F.col(col).between(lo, hi))
-        if reduced:
-            df = _lww_reduce(df, to_tbl["key_cols"], to_tbl["order_cols"])
-        return df
-
-    # ----------------------------------------------------------------- merge
-    def _collect_table_stats(
-        self, tbl: dict, rel: str, written: list[str]
-    ) -> dict[str, dict[str, list]]:
-        """Zone-map stats for one table's fresh files (field-id keyed);
-        same O(batch) collection as the single table's."""
-        from sonic_etl_spark.sources.table import collect_parquet_stats
-
-        cols = tbl.get("stats_cols") or []
-        if not cols or not written:
-            return {}
-        cur = next(
-            s for s in tbl["schemas"] if s["schema_id"] == tbl["current_schema_id"]
-        )
-        ids = {f["name"]: f["id"] for f in cur["fields"]}
-        return collect_parquet_stats(
-            self.spark, os.path.join(self.path, rel), cols, ids
-        )
-
-    def _write_table_files(
-        self, snap: dict, new_id: int, name: str, df: DataFrame
-    ) -> tuple[str, list[str]]:
-        tbl = snap["tables"][name]
-        n_buckets = snap["n_buckets"]
-        cur = next(
-            s for s in tbl["schemas"] if s["schema_id"] == tbl["current_schema_id"]
-        )
-        # schema-id-aware writer projection (mirror of
-        # TransactionalParquetTable._project_to_current): route producer
-        # columns to current names by FIELD ID, accepting historical
-        # (pre-rename) names; backfill columns unknown to the producer.
-        historical: dict[int, list[str]] = {}
-        for sch in sorted(tbl["schemas"], key=lambda s: -s["schema_id"]):
-            for f in sch["fields"]:
-                historical.setdefault(f["id"], [])
-                if f["name"] not in historical[f["id"]]:
-                    historical[f["id"]].append(f["name"])
-        proj = []
-        for f in cur["fields"]:
-            src = next((n for n in historical[f["id"]] if n in df.columns), None)
-            if src is not None:
-                proj.append(F.col(src).cast(f["type"]).alias(f["name"]))
-            else:
-                proj.append(F.lit(None).cast(f["type"]).alias(f["name"]))
-        projected = df.select(*proj)
-        rel = os.path.join(DATA_DIR, f"snap-{new_id}", name)
-        out_dir = os.path.join(self.path, rel)
-        bcols = [F.col(c) for c in tbl["bucket_cols"]]
-        (
-            projected.withColumn(
-                "_pb",
-                F.pmod(F.xxhash64(*bcols), F.lit(n_buckets)).cast("int"),
-            )
-            .repartition(max(n_buckets, 1), F.col("_pb"))
-            .write.partitionBy("_pb")
-            .mode("overwrite")
-            .parquet(out_dir)
-        )
-        written = [
-            n.split("=", 1)[1] for n in os.listdir(out_dir) if n.startswith("_pb=")
-        ]
-        return rel, written
-
+    # ------------------------------------------------------------------ writes
     def merge_all(
         self,
         updates: dict[str, DataFrame],
@@ -453,67 +163,17 @@ class TransactionalTableSet:
         pointer flip records every table's new files AND the manifest entries
         — the cross-table exactly-once guarantee.
 
-        ``pre_commit_check``: called after all writes, before the pointer
-        flip; raising aborts the whole multi-table commit (orphan files
-        only) — the observation-based fail-the-batch hook.
+        ``pre_commit_check``: called after all writes, before the zone-map
+        stats jobs and the pointer flip; raising aborts the whole
+        multi-table commit (orphan files only) — the observation-based
+        fail-the-batch hook.
         """
-        t0 = time.time()
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} missing; create() first")
+        parent = self._snap()
         unknown = set(updates) - set(parent["tables"])
         if unknown:
             raise KeyError(f"unknown tables {sorted(unknown)}")
-        committed = {tuple(m) for m in parent["manifests"]}
-        entries = [tuple(e) for e in manifest_entries]
-        fresh = [e for e in entries if e not in committed]
-        if not fresh:
-            return {"status": "skipped", "snapshot_id": parent["snapshot_id"]}
+        return self._merge(parent, updates, manifest_entries, metrics, pre_commit_check)
 
-        new_id = parent["snapshot_id"] + 1
-        tbls = {
-            name: {**tbl, "buckets": {b: dict(e) for b, e in tbl["buckets"].items()}}
-            for name, tbl in parent["tables"].items()
-        }
-        written_counts = {}
-        for name, df in updates.items():
-            rel, written = self._write_table_files(parent, new_id, name, df)
-            tbl = tbls[name]
-            file_stats = self._collect_table_stats(tbl, rel, written)
-            for b in written:
-                ent = tbl["buckets"].setdefault(b, {"files": []})
-                fent = {
-                    "path": os.path.join(rel, f"_pb={b}"),
-                    "schema_id": tbl["current_schema_id"],
-                }
-                if b in file_stats:
-                    fent["stats"] = file_stats[b]
-                ent["files"] = ent["files"] + [fent]
-            written_counts[name] = len(written)
-        if pre_commit_check is not None:
-            pre_commit_check()  # raising aborts: files orphan, no commit
-
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": parent["n_buckets"],
-            "tables": tbls,
-            "manifests": parent["manifests"] + [list(e) for e in fresh],
-            "metrics": {
-                **(metrics or {}),
-                "buckets_written": written_counts,
-                "apply_sec": round(time.time() - t0, 3),
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "committed",
-            "snapshot_id": new_id,
-            "buckets_written": written_counts,
-        }
-
-    # ------------------------------------------------------------- evolution
     def evolve(
         self,
         name: str,
@@ -524,229 +184,10 @@ class TransactionalTableSet:
     ) -> dict:
         """Schema-only snapshot for ONE table of the set (field-id semantics
         identical to TransactionalParquetTable.evolve, incl. lossless
-        ``widen`` and id-retiring ``drop``): existing files are untouched;
-        readers map them by field id. Other tables are unaffected — but the
-        commit is still one atomic pointer flip of the shared log.
+        ``widen`` and id-retiring ``drop``; bucket columns cannot be
+        dropped either): existing files are untouched; readers map them by
+        field id. Other tables are unaffected — but the commit is still one
+        atomic pointer flip of the shared log.
         """
-        from sonic_etl_spark.sources.table import _WIDEN_OK, _norm_type
-
-        parent = self.latest()
-        if parent is None or name not in parent["tables"]:
-            raise FileNotFoundError(f"table {name} not in set {self.path}")
-        tbls = {n: dict(t) for n, t in parent["tables"].items()}
-        tbl = dict(tbls[name])
-        cur = next(
-            s for s in tbl["schemas"] if s["schema_id"] == tbl["current_schema_id"]
-        )
-        fields = [dict(f) for f in cur["fields"]]
-        protected = (
-            set(tbl["key_cols"]) | set(tbl["order_cols"]) | set(tbl["bucket_cols"])
-        )
-        for cname in drop or []:
-            hit = [f for f in fields if f["name"] == cname]
-            if not hit:
-                raise KeyError(f"drop: no column {cname!r} in {name}")
-            if cname in protected:
-                raise ValueError(f"drop: {cname!r} is a key/order/bucket column")
-            fields.remove(hit[0])
-        for old, new in (rename or {}).items():
-            hit = [f for f in fields if f["name"] == old]
-            if not hit:
-                raise KeyError(f"rename: no column {old!r} in {name}")
-            hit[0]["name"] = new
-        for cname, new_type in (widen or {}).items():
-            hit = [f for f in fields if f["name"] == cname]
-            if not hit:
-                raise KeyError(f"widen: no column {cname!r} in {name}")
-            pair = (_norm_type(hit[0]["type"]), _norm_type(new_type))
-            if pair not in _WIDEN_OK:
-                raise ValueError(
-                    f"widen: {hit[0]['type']} -> {new_type} is not a "
-                    f"lossless promotion (allowed: {sorted(_WIDEN_OK)})"
-                )
-            hit[0]["type"] = new_type
-        # ids are retired forever: max over ALL schemas, never just current
-        all_ids = [f["id"] for sch in tbl["schemas"] for f in sch["fields"]]
-        next_id = max(all_ids, default=-1) + 1
-        for cname, typ in add or []:
-            if any(f["name"] == cname for f in fields):
-                raise KeyError(f"add: column {cname!r} exists in {name}")
-            fields.append({"id": next_id, "name": cname, "type": typ})
-            next_id += 1
-        new_schema = {"schema_id": cur["schema_id"] + 1, "fields": fields}
-        id_by_old = {f["name"]: f["id"] for f in cur["fields"]}
-        new_by_id = {f["id"]: f["name"] for f in fields}
-
-        def remap(cols):
-            return [new_by_id.get(id_by_old.get(c, -1), c) for c in cols]
-
-        def remap_surviving(cols):
-            # stats_cols are droppable: a dropped column must leave the
-            # list, else every later merge fails collecting its min/max
-            return [
-                new_by_id[id_by_old[c]]
-                for c in cols
-                if c in id_by_old and id_by_old[c] in new_by_id
-            ]
-
-        tbl["schemas"] = tbl["schemas"] + [new_schema]
-        tbl["current_schema_id"] = new_schema["schema_id"]
-        tbl["key_cols"] = remap(tbl["key_cols"])
-        tbl["order_cols"] = remap(tbl["order_cols"])
-        tbl["bucket_cols"] = remap(tbl["bucket_cols"])
-        tbl["stats_cols"] = remap_surviving(tbl.get("stats_cols", []))
-        tbls[name] = tbl
-        snap = {
-            "snapshot_id": parent["snapshot_id"] + 1,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": parent["n_buckets"],
-            "tables": tbls,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "evolution": {
-                    "table": name,
-                    "add": add or [],
-                    "rename": rename or {},
-                    "widen": widen or {},
-                    "drop": drop or [],
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return snap
-
-    def rebucket(self, n_buckets: int) -> dict:
-        """Partition evolution for the WHOLE set: one LWW-reduced rewrite of
-        every table into the new bucket count under ONE commit (n_buckets is
-        shared across the set, so per-table rebucketing cannot exist).
-        Same contract as TransactionalParquetTable.rebucket: state hashes
-        preserved, tombstones retained, manifests carried (fan-out replay
-        resumption and exactly-once unaffected), zone-map stats recollected;
-        incremental readers get the rewrite-boundary refusal."""
-        if n_buckets <= 0:
-            raise ValueError(f"rebucket: n_buckets must be positive, got {n_buckets}")
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} does not exist")
-        if parent["n_buckets"] == n_buckets:
-            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
-        t0 = time.time()
-        new_id = parent["snapshot_id"] + 1
-        # the writer hashes by the PARENT snapshot's layout fields but must
-        # target the NEW bucket count: pass a shallow parent copy with the
-        # new n_buckets so _write_table_files routes into the new layout
-        parent_new_n = {**parent, "n_buckets": n_buckets}
-        tbls = {}
-        for name, tbl in parent["tables"].items():
-            state = _lww_reduce(
-                read_buckets_projected(
-                    self.spark, self.path, tbl, list(tbl["buckets"].keys())
-                ),
-                tbl["key_cols"],
-                tbl["order_cols"],
-            )
-            rel, written = self._write_table_files(
-                parent_new_n, new_id, name, state
-            )
-            new_tbl = {**tbl, "buckets": {}}
-            file_stats = self._collect_table_stats(new_tbl, rel, written)
-            for b in written:
-                fent = {
-                    "path": os.path.join(rel, f"_pb={b}"),
-                    "schema_id": tbl["current_schema_id"],
-                }
-                if b in file_stats:
-                    fent["stats"] = file_stats[b]
-                new_tbl["buckets"][b] = {"files": [fent]}
-            tbls[name] = new_tbl
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": n_buckets,
-            "tables": tbls,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "rebucket": {
-                    "from": parent["n_buckets"],
-                    "to": n_buckets,
-                    "rebucket_sec": round(time.time() - t0, 3),
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {"status": "rebucketed", "snapshot_id": new_id, "n_buckets": n_buckets}
-
-    # ------------------------------------------------------------ compaction
-    def compact(self, max_files_per_bucket: int = 8, force: bool = False) -> dict:
-        """Fold long delta chains per table (merge-on-read maintenance).
-
-        One snapshot commit covers every table's compaction — same atomicity
-        as merge_all. Tombstones are retained (late lower-order upserts must
-        still lose after compaction).
-        """
-        t0 = time.time()
-        parent = self.latest()
-        if parent is None:
-            raise FileNotFoundError(f"table set {self.path} does not exist")
-        new_id = parent["snapshot_id"] + 1
-        tbls = {
-            name: {**tbl, "buckets": {b: dict(e) for b, e in tbl["buckets"].items()}}
-            for name, tbl in parent["tables"].items()
-        }
-        total_victims = 0
-        for name, tbl in tbls.items():
-            victims = [
-                b
-                for b, ent in tbl["buckets"].items()
-                if force or len(ent["files"]) > max_files_per_bucket
-            ]
-            if not victims:
-                continue
-            state = _lww_reduce(
-                read_buckets_projected(self.spark, self.path, tbl, victims),
-                tbl["key_cols"],
-                tbl["order_cols"],
-            )
-            rel, written = self._write_table_files(parent, new_id, name, state)
-            stray = set(written) - set(victims)
-            if stray:
-                raise RuntimeError(
-                    f"{name}: compaction wrote buckets {sorted(stray)} outside "
-                    f"victims {sorted(victims)}"
-                )
-            file_stats = self._collect_table_stats(tbl, rel, written)
-            for b in victims:
-                tbl["buckets"].pop(b, None)
-            for b in written:
-                fent = {
-                    "path": os.path.join(rel, f"_pb={b}"),
-                    "schema_id": tbl["current_schema_id"],
-                }
-                if b in file_stats:
-                    fent["stats"] = file_stats[b]
-                tbl["buckets"][b] = {"files": [fent]}
-            total_victims += len(victims)
-        if not total_victims:
-            return {"status": "noop", "snapshot_id": parent["snapshot_id"]}
-        snap = {
-            "snapshot_id": new_id,
-            "parent_id": parent["snapshot_id"],
-            "n_buckets": parent["n_buckets"],
-            "tables": tbls,
-            "manifests": parent["manifests"],
-            "metrics": {
-                "compaction": {
-                    "buckets_compacted": total_victims,
-                    "compact_sec": round(time.time() - t0, 3),
-                }
-            },
-            "committed_at": time.time(),
-        }
-        self._commit_snapshot(snap, expected_parent=parent["snapshot_id"])
-        return {
-            "status": "compacted",
-            "snapshot_id": new_id,
-            "buckets_compacted": total_victims,
-        }
+        self._table(name)
+        return self._evolve(name, {"table": name}, add, rename, widen, drop)

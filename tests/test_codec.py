@@ -102,17 +102,6 @@ def test_field_attributed_errors(spark):
     assert mismatch["decode_error"] == "size: mismatch vs content"
 
 
-def test_fail_the_batch(spark):
-    from sonic_etl_spark.operators.merge import assert_no_decode_errors
-    import pytest
-
-    ok = decode_change_events(_event(spark, _raw_row("fine")))
-    assert assert_no_decode_errors(ok) == 1
-    bad = decode_change_events(_event(spark, "{not json"))
-    with pytest.raises(ValueError, match="malformed json"):
-        assert_no_decode_errors(bad)
-
-
 def test_numeric_checked_range_and_validity(spark):
     from sonic_etl_spark.functions.codec import numeric_checked
 

@@ -457,3 +457,36 @@ def test_tableset_drop_stats_col_keeps_merges_working(spark, tmp_path):
     upd = spark.createDataFrame([("b", 2)], "k string, off bigint")
     assert ts.merge_all({"t": upd}, [(0, 10, 19)])["status"] == "committed"
     assert ts.read("t").count() == 2
+
+
+def test_merge_all_runs_pre_commit_check_before_stats(spark, tmp_path, monkeypatch):
+    """A multi-table batch the pre-commit check rejects must not pay for
+    the zone-map stats job of any table: the check runs right after the
+    data writes, before stats collection and the pointer flip."""
+    from sonic_etl_spark.sources import table as table_mod
+    from sonic_etl_spark.sources.multitable import TableSpec
+
+    calls = []
+    real = table_mod.collect_parquet_stats
+    monkeypatch.setattr(
+        table_mod, "collect_parquet_stats",
+        lambda *a, **kw: calls.append(a) or real(*a, **kw),
+    )
+    ts = TransactionalTableSet(spark, str(tmp_path / "fc"), n_buckets=2)
+    ts.create({
+        "t": TableSpec(
+            fields=[("k", "string"), ("off", "bigint")],
+            key_cols=["k"], order_cols=["off"], stats_cols=["off"],
+        )
+    })
+    df = spark.createDataFrame([("a", 1)], "k string, off bigint")
+
+    def reject():
+        raise ValueError("decode failed for 1/1 rows in batch")
+
+    with pytest.raises(ValueError, match="decode failed"):
+        ts.merge_all({"t": df}, [(0, 0, 9)], pre_commit_check=reject)
+    assert calls == []
+    assert ts.latest()["snapshot_id"] == 1
+    assert ts.merge_all({"t": df}, [(0, 0, 9)])["status"] == "committed"
+    assert len(calls) == 1

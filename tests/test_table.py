@@ -774,3 +774,25 @@ def test_read_for_keys_prunes_to_touched_buckets(spark, tmp_path):
     # missing key columns refused
     with pytest.raises(KeyError, match="key columns"):
         tab.read_for_keys(spark.createDataFrame([("r1",)], "repo string"))
+
+
+def test_every_method_on_a_missing_table_raises_file_not_found(spark, tmp_path):
+    """A table that was never create()d refuses every read and write with
+    FileNotFoundError (evolve and files_per_bucket included)."""
+    tab = TransactionalParquetTable(spark, str(tmp_path / "t"), n_buckets=2)
+    calls = [
+        lambda: tab.read(),
+        lambda: tab.lookup(repo="r", path="a"),
+        lambda: tab.read_changes(),
+        lambda: tab.merge(_df(spark, []), [(0, 0, 0)]),
+        lambda: tab.compact(force=True),
+        lambda: tab.rebucket(4),
+        lambda: tab.rollback(1),
+        lambda: tab.expire_snapshots(),
+        lambda: tab.evolve(add=[("x", "string")]),
+        lambda: tab.files_per_bucket(),
+    ]
+    for call in calls:
+        with pytest.raises(FileNotFoundError):
+            call()
+    assert tab.committed_ranges() == set()
